@@ -140,19 +140,13 @@ final class CsvCodec private (val schema: StructType) extends PayloadCodec {
         }
       case StringType => Right(UTF8String.fromString(value))
       case TimestampType =>
-        try {
-          val dt = LocalDateTime.parse(value, CsvCodec.tsFormat)
-          Right(dt.toEpochSecond(ZoneOffset.UTC) * 1000000L)
-        } catch { case _: Exception => Left(TypeError(
+        CsvCodec.parseTimestamp(value).toRight(TypeError(
           s"Failed to parse $value as Timestamp for field ${field.name}. " +
-            "Expected format: YYYY-MM-DD HH:MM:SS")) }
+            "Expected format: YYYY-MM-DD HH:MM:SS"))
       case DateType =>
-        try {
-          val d = LocalDate.parse(value, CsvCodec.dateFormat)
-          Right(d.toEpochDay.toInt)
-        } catch { case _: Exception => Left(TypeError(
+        CsvCodec.parseDate(value).toRight(TypeError(
           s"Failed to parse $value as Date for field ${field.name}. " +
-            "Expected format: YYYY-MM-DD")) }
+            "Expected format: YYYY-MM-DD"))
       case other =>
         // Unreachable for codecs built via CsvCodec.apply (whitelist below);
         // kept as defense-in-depth like the reference (csv.rs:187-193).
@@ -165,6 +159,65 @@ object CsvCodec {
     DateTimeFormatter.ofPattern("uuuu-MM-dd HH:mm:ss").withResolverStyle(ResolverStyle.STRICT)
   private[nats] val dateFormat =
     DateTimeFormatter.ofPattern("uuuu-MM-dd").withResolverStyle(ResolverStyle.STRICT)
+
+  /** A wire timestamp ("yyyy-MM-dd HH:mm:ss", UTC) as epoch microseconds;
+    * None when [[tsFormat]] rejects it. The canonical 19-character form is
+    * read from its fixed digit positions with the formatter's STRICT
+    * checks (month 1–12, day within the month of that year, hour 0–23,
+    * minute and second 0–59); every other string — out-of-range fields,
+    * signed or 5+-digit years, stray characters — goes to the formatter
+    * itself, so accepted inputs and values are exactly the formatter's. */
+  private[nats] def parseTimestamp(value: String): Option[Long] =
+    if (value.length == 19 && value.charAt(10) == ' ' &&
+        value.charAt(13) == ':' && value.charAt(16) == ':') {
+      val day = epochDay(value)
+      val h = twoDigits(value, 11)
+      val m = twoDigits(value, 14)
+      val sec = twoDigits(value, 17)
+      if (day != NotCanonical && h >= 0 && h <= 23 && m >= 0 && m <= 59 && sec >= 0 && sec <= 59)
+        Some((day * 86400L + h * 3600L + m * 60L + sec) * 1000000L)
+      else formatterTimestamp(value)
+    } else formatterTimestamp(value)
+
+  /** A wire date ("yyyy-MM-dd") as days since 1970-01-01; None when
+    * [[dateFormat]] rejects it. Same fast path and fallback as
+    * [[parseTimestamp]]. */
+  private[nats] def parseDate(value: String): Option[Int] =
+    if (value.length == 10) {
+      val day = epochDay(value)
+      if (day != NotCanonical) Some(day.toInt) else formatterDate(value)
+    } else formatterDate(value)
+
+  private def formatterTimestamp(value: String): Option[Long] =
+    try Some(LocalDateTime.parse(value, tsFormat).toEpochSecond(ZoneOffset.UTC) * 1000000L)
+    catch { case _: Exception => None }
+
+  private def formatterDate(value: String): Option[Int] =
+    try Some(LocalDate.parse(value, dateFormat).toEpochDay.toInt)
+    catch { case _: Exception => None }
+
+  private val NotCanonical = Long.MinValue
+
+  /** The two ASCII digits at `i`, or -1. */
+  private def twoDigits(s: String, i: Int): Int = {
+    val a = s.charAt(i) - '0'
+    val b = s.charAt(i + 1) - '0'
+    if (a < 0 || a > 9 || b < 0 || b > 9) -1 else a * 10 + b
+  }
+
+  /** Epoch day of a valid "yyyy-MM-dd" prefix, or NotCanonical. */
+  private def epochDay(s: String): Long = {
+    if (s.charAt(4) != '-' || s.charAt(7) != '-') return NotCanonical
+    val hi = twoDigits(s, 0)
+    val lo = twoDigits(s, 2)
+    val month = twoDigits(s, 5)
+    val day = twoDigits(s, 8)
+    if (hi < 0 || lo < 0 || month < 1 || month > 12 || day < 1) return NotCanonical
+    val year = hi * 100 + lo
+    if (day > java.time.Month.of(month).length(java.time.Year.isLeap(year.toLong)))
+      return NotCanonical
+    LocalDate.of(year, month, day).toEpochDay
+  }
 
   /** Validate the schema and build a codec (reference src/codec/csv.rs:48-91);
     * the rules are shared across codecs in [[PayloadCodec.validateSchema]]. */

@@ -104,19 +104,15 @@ final class JsonCodec private (val schema: StructType) extends PayloadCodec {
       case (StringType, JsonToken.VALUE_STRING) =>
         Right(UTF8String.fromString(parser.getText))
       case (TimestampType, JsonToken.VALUE_STRING) =>
-        try {
-          val dt = LocalDateTime.parse(parser.getText, CsvCodec.tsFormat)
-          Right(dt.toEpochSecond(ZoneOffset.UTC) * 1000000L)
-        } catch { case _: Exception => Left(TypeError(
-          s"Failed to parse ${parser.getText} as Timestamp for field ${field.name}. " +
-            "Expected format: YYYY-MM-DD HH:MM:SS")) }
+        val text = parser.getText
+        CsvCodec.parseTimestamp(text).toRight(TypeError(
+          s"Failed to parse $text as Timestamp for field ${field.name}. " +
+            "Expected format: YYYY-MM-DD HH:MM:SS"))
       case (DateType, JsonToken.VALUE_STRING) =>
-        try {
-          val d = LocalDate.parse(parser.getText, CsvCodec.dateFormat)
-          Right(d.toEpochDay.toInt)
-        } catch { case _: Exception => Left(TypeError(
-          s"Failed to parse ${parser.getText} as Date for field ${field.name}. " +
-            "Expected format: YYYY-MM-DD")) }
+        val text = parser.getText
+        CsvCodec.parseDate(text).toRight(TypeError(
+          s"Failed to parse $text as Date for field ${field.name}. " +
+            "Expected format: YYYY-MM-DD"))
       case (_, JsonToken.VALUE_NULL) =>
         Left(InvalidValue(field.name, "null"))
       case (_, JsonToken.START_OBJECT | JsonToken.START_ARRAY) =>

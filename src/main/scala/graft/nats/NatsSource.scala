@@ -6,6 +6,7 @@ import java.util.concurrent.atomic.LongAdder
 
 import scala.jdk.CollectionConverters._
 
+import org.apache.spark.SparkContext
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.connector.catalog.{MetadataColumn, SupportsMetadataColumns, SupportsRead, SupportsWrite, Table, TableCapability, TableProvider}
@@ -19,6 +20,7 @@ import org.apache.spark.sql.sources._
 import org.apache.spark.sql.types.{DataType, LongType, MapType, StringType, StructType}
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
+import org.apache.spark.util.LongAccumulator
 
 /** Options for `format("nats")`, defaults mirroring the reference's
   * BatchBufferConfig (reference src/batch_buffer.rs:22-28).
@@ -162,7 +164,9 @@ object NatsOptions {
   * queries sharing (url, subject) — the AUTHORITATIVE per-query count is
   * the scan's DSv2 custom metric ([[MalformedRowsMetric]]), which Spark
   * sums from executor task metrics through the accumulator machinery and
-  * surfaces per scan in the SQL UI / `SparkPlan.metrics`.
+  * surfaces per scan in the SQL UI / `SparkPlan.metrics`; a streaming
+  * query's `malformedRows` source metric comes from its own accumulator
+  * (see [[NatsStreamReaderFactory]]), never from this counter.
   */
 object NatsMetrics {
   private val malformed = new ConcurrentHashMap[String, LongAdder]()
@@ -257,8 +261,8 @@ object NatsMetadata {
   // planned partitions): k SOH v, pairs joined by STX. Well-formed NATS
   // headers never contain NUL/SOH/STX, but a foreign client CAN put any
   // byte in an HMSG value — sanitize at encode time (control bytes -> ' ')
-  // so hostile headers cannot mis-frame the NUL-separated ledger entry
-  // or desynchronize the k/v split; skip-and-continue must survive them.
+  // so hostile headers cannot desynchronize the k/v split;
+  // skip-and-continue must survive them.
   private val KV = '\u0001'
   private val Pair = '\u0002'
   private def clean(s: String): String = {
@@ -640,15 +644,18 @@ private[nats] final class RowPipeline(
     fullSchema: StructType,
     required: StructType,
     filters: Array[Filter],
-    opts: NatsOptions) extends Serializable {
+    opts: NatsOptions,
+    streamMalformed: Option[LongAccumulator] = None) extends Serializable {
 
   private val SubjectIdx = -1
   private val SeqIdx = -2
   private val HeadersIdx = -3
 
   // Task-local malformed count feeding the scan's DSv2 custom metric
-  // (per-query, executor→driver via task metrics); the static NatsMetrics
-  // counter is kept as the local-mode/ops convenience surface.
+  // (per-query, executor→driver via task metrics); a micro-batch stream
+  // also counts into its own accumulator (`streamMalformed`, the source
+  // metric in StreamingQueryProgress); the static NatsMetrics counter is
+  // kept as the local-mode/ops convenience surface.
   @transient private var malformedLocal = 0L
   def malformedCount: Long = malformedLocal
 
@@ -713,6 +720,7 @@ private[nats] final class RowPipeline(
     codec.parse(payload) match {
       case Left(err) =>
         malformedLocal += 1
+        streamMalformed.foreach(_.add(1L))
         NatsMetrics.malformedCounter(opts.url, opts.subject).increment()
         deadLetter(subject, seq, payload, err.message)
         None
@@ -807,7 +815,6 @@ final class NatsBatch(
   override def createReaderFactory(): PartitionReaderFactory = new PartitionReaderFactory {
     override def createReader(partition: InputPartition): PartitionReader[InternalRow] =
       partition match {
-        case p: NatsStreamPartition => new PayloadPartitionReader(p)
         case p: NatsReplayPartition => new NatsReplayReader(p)
         case p: NatsBatchPartition  => new NatsBatchReader(p)
       }
@@ -863,7 +870,7 @@ final class NatsBatchReader(p: NatsBatchPartition) extends PartitionReader[Inter
 // Micro-batch streaming path (reference src/executor.rs:44-174 re-shaped
 // onto Spark's socket-source pattern): a driver-side subscription feeds the
 // MessageLedger; latestOffset applies the flush policy; planned batches ship
-// their raw payloads to executors inside InputPartitions where they are
+// their raw payload bytes to executors inside InputPartitions where they are
 // decoded in parallel.
 // ---------------------------------------------------------------------------
 
@@ -871,47 +878,124 @@ final case class NatsOffset(count: Long) extends Offset {
   override def json(): String = count.toString
 }
 
-object NatsMicroBatchStream {
-  /** Separator between the envelope fields (concrete subject, encoded
-    * headers) and the payload in ledger entries — every entry carries
-    * its subject (the _subject metadata column and the
-    * partitionBySubject grouping both need it) and its headers
-    * (_headers); NUL never occurs in subjects, NATS headers, or valid
-    * CSV/JSON payload text. Entry form:
-    * `<subject>NUL<headersEnc>NUL<payload>`. */
-  val SubjectSep: Char = '\u0000'
-}
-
-/** A shipped slice of messages: payloads plus their envelope (concrete
-  * subject, source sequence, encoded headers) in parallel arrays — the
-  * envelope feeds the [[NatsMetadata]] columns. Subject entries for a
-  * literal subject are the SAME string reference, which Java
-  * serialization writes once; headerless messages share the "" instance.
+/** A shipped slice of live messages, packed for the trip to the executor:
+  * every payload back to back in one byte block (row i is
+  * `block[ends(i-1), ends(i))`, the first row starting at 0), each row's
+  * source sequence in `seqs`, and the envelope (concrete subject, encoded
+  * headers) as runs — rows `[runEnds(r-1), runEnds(r))` share
+  * `runSubjects(r)` and `runHeaders(r)`. A literal-subject, headerless
+  * slice is one run, so Java serialization ships the payload bytes plus
+  * 12 bytes a row (one Int end, one Long seq) and one copy of each
+  * distinct envelope; the executor decodes straight out of the block.
   */
-private final case class NatsStreamPartition(
-    payloads: Array[String],
-    subjects: Array[String],
+private[nats] final case class NatsStreamPartition(
+    block: Array[Byte],
+    ends: Array[Int],
     seqs: Array[Long],
-    headerEncs: Array[String],
+    runEnds: Array[Int],
+    runSubjects: Array[String],
+    runHeaders: Array[String],
     fullSchema: StructType,
     required: StructType,
     filters: Array[Filter],
-    opts: NatsOptions) extends InputPartition
+    opts: NatsOptions) extends InputPartition {
 
-/** Decodes a shipped payload slice on the executor — the LIVE-stream
+  def rowCount: Int = ends.length
+
+  /** Row i's payload text (UTF-8, as the codecs take it). */
+  def payload(i: Int): String = {
+    val from = if (i == 0) 0 else ends(i - 1)
+    new String(block, from, ends(i) - from, java.nio.charset.StandardCharsets.UTF_8)
+  }
+}
+
+private[nats] object NatsStreamPartition {
+  /** Pack `entries(rows(k))` in `rows` order; entry i has sequence
+    * `firstSeq + i`. Consecutive rows with equal subject and headers
+    * share one envelope run. */
+  def pack(
+      entries: Array[LedgerEntry],
+      rows: IndexedSeq[Int],
+      firstSeq: Long,
+      fullSchema: StructType,
+      required: StructType,
+      filters: Array[Filter],
+      opts: NatsOptions): NatsStreamPartition = {
+    val n = rows.length
+    var total = 0L
+    var k = 0
+    while (k < n) { total += entries(rows(k)).payload.length; k += 1 }
+    require(total <= Int.MaxValue - 16,
+      s"a planned slice of $n messages holds $total payload bytes, more than one " +
+        "partition can ship: raise numPartitions or lower batchSize / maxBatchesPerTrigger")
+    val block = new Array[Byte](total.toInt)
+    val ends = new Array[Int](n)
+    val seqs = new Array[Long](n)
+    val runEnds = scala.collection.mutable.ArrayBuilder.make[Int]
+    val runSubjects = scala.collection.mutable.ArrayBuilder.make[String]
+    val runHeaders = scala.collection.mutable.ArrayBuilder.make[String]
+    var off = 0
+    var prev: LedgerEntry = null
+    k = 0
+    while (k < n) {
+      val e = entries(rows(k))
+      System.arraycopy(e.payload, 0, block, off, e.payload.length)
+      off += e.payload.length
+      ends(k) = off
+      seqs(k) = firstSeq + rows(k)
+      if (prev == null || e.subject != prev.subject || e.headers != prev.headers) {
+        if (prev != null) runEnds += k
+        runSubjects += e.subject
+        runHeaders += e.headers
+      }
+      prev = e
+      k += 1
+    }
+    if (n > 0) runEnds += n
+    NatsStreamPartition(block, ends, seqs, runEnds.result(), runSubjects.result(),
+      runHeaders.result(), fullSchema, required, filters, opts)
+  }
+}
+
+/** Decodes a shipped payload block on the executor — the LIVE-stream
   * path, where the driver-side subscription is the only place the bytes
   * exist (fire-and-forget push; there is nothing to re-fetch from). */
-private final class PayloadPartitionReader(p: NatsStreamPartition)
+private final class PayloadPartitionReader(p: NatsStreamPartition, malformed: LongAccumulator)
     extends PartitionReader[InternalRow] {
-  private val pipeline = new RowPipeline(p.fullSchema, p.required, p.filters, p.opts)
-  private val it = p.payloads.indices.iterator
-    .flatMap(i => pipeline.decode(p.subjects(i), p.seqs(i), p.headerEncs(i), p.payloads(i)))
+  private val pipeline =
+    new RowPipeline(p.fullSchema, p.required, p.filters, p.opts, Some(malformed))
+  private var i = 0   // next row to decode
+  private var run = 0 // envelope run of row i
   private var current: InternalRow = _
-  override def next(): Boolean = it.hasNext && { current = it.next(); true }
+  override def next(): Boolean = {
+    while (i < p.rowCount) {
+      while (p.runEnds(run) <= i) run += 1
+      val row = pipeline.decode(p.runSubjects(run), p.seqs(i), p.runHeaders(run), p.payload(i))
+      i += 1
+      if (row.isDefined) { current = row.get; return true }
+    }
+    false
+  }
   override def get(): InternalRow = current
   override def close(): Unit = pipeline.close()
   override def currentMetricsValues(): Array[CustomTaskMetric] =
     Array(MalformedRowsMetric.taskMetric(pipeline.malformedCount))
+}
+
+/** The micro-batch reader factory. It carries the stream's malformed-row
+  * accumulator: the factory travels inside the task's RDD closure, which
+  * an executor deserializes once the task is running — the point where an
+  * accumulator registers with the task so its count flows back to the
+  * driver. (An InputPartition is deserialized with the task envelope,
+  * before the task context exists, so an accumulator it carried would
+  * never report.) */
+private final case class NatsStreamReaderFactory(malformed: LongAccumulator)
+    extends PartitionReaderFactory {
+  override def createReader(partition: InputPartition): PartitionReader[InternalRow] =
+    partition match {
+      case p: NatsStreamPartition => new PayloadPartitionReader(p, malformed)
+      case p: NatsReplayPartition => new NatsReplayReader(p, Some(malformed))
+    }
 }
 
 /** Offsets-only replay work unit: `(afterSeq, afterSeq + count]` on the
@@ -965,9 +1049,12 @@ private[nats] object NatsReplayPartition {
   * bytes. Eviction between planning and execution still fails fast
   * (fetchRetained throws), now as a task failure carrying the same
   * guidance. */
-private[nats] final class NatsReplayReader(p: NatsReplayPartition)
+private[nats] final class NatsReplayReader(
+    p: NatsReplayPartition,
+    streamMalformed: Option[LongAccumulator] = None)
     extends PartitionReader[InternalRow] {
-  private val pipeline = new RowPipeline(p.fullSchema, p.required, p.filters, p.opts)
+  private val pipeline =
+    new RowPipeline(p.fullSchema, p.required, p.filters, p.opts, streamMalformed)
   private val conn: ReplayableNatsConnection = NatsTransport.connect(p.opts.url, p.opts.tls) match {
     case r: ReplayableNatsConnection =>
       NatsMetrics.replayReaderConnections.increment()
@@ -1055,18 +1142,12 @@ final class NatsMicroBatchStream(
     LedgerConfig(opts.batchSize, opts.flushTimeoutMs, opts.maxBufferSize))
   // Ledger appends are synchronized, so N concurrent queue members admit
   // each message exactly once (each message reaches exactly one member).
-  // Every entry carries its envelope ("<subject>NUL<headers>NUL<payload>")
-  // — planning splits it back out to feed the _subject/_headers metadata
-  // columns and the partitionBySubject grouping. NUL as separator:
-  // subjects/headers are ASCII-ish tokens and codec payloads are CSV/JSON
-  // text — a raw NUL in any is already invalid, and the first two NULs
-  // always belong to the envelope.
+  // Every entry keeps its envelope (concrete subject, encoded headers) next
+  // to the payload bytes — the _subject/_headers metadata columns and the
+  // partitionBySubject grouping read it at planning time.
   private val onSubjectPayload: (String, Seq[(String, String)], Array[Byte]) => Unit = {
     (subj, headers, payload) =>
-      ledger.append(
-        subj + NatsMicroBatchStream.SubjectSep +
-          NatsMetadata.encodeHeaders(headers) + NatsMicroBatchStream.SubjectSep +
-          new String(payload, java.nio.charset.StandardCharsets.UTF_8))
+      ledger.append(LedgerEntry(subj, NatsMetadata.encodeHeaders(headers), payload))
       ()
   }
   // Ingest scale-out (ADVICE r4 "What's missing" #2): with queueGroup set,
@@ -1088,6 +1169,12 @@ final class NatsMicroBatchStream(
       case None => Seq(conn.subscribeHeadersEach(opts.subject)(onSubjectPayload))
     }
   private var admitted = 0L
+  // This stream's malformed-payload count, summed from its own tasks (see
+  // NatsStreamReaderFactory) — per query, unlike the static NatsMetrics
+  // counter, which every query on the same url/subject shares. Created on
+  // first use: a stream built outside a query has no SparkContext.
+  private lazy val malformed: LongAccumulator =
+    SparkContext.getOrCreate().longAccumulator(s"nats.malformedRows(${opts.subject})")
   // Replay bookkeeping: the resolved start sequence (-1 until the first
   // poll) and the flush-policy clock for partial-batch admission.
   private var replayStart = -1L
@@ -1236,30 +1323,15 @@ final class NatsMicroBatchStream(
     // pulls its own slice from retention (seq = broker sequence) — no
     // payload bytes on the driver, and eviction between planning and
     // execution still fails fast, now executor-side. Live reads have no
-    // re-fetchable store, so they ship the ledger's buffered
-    // "<subject>NUL<headers>NUL<payload>" entries (seq = ledger offset),
-    // reusing one string instance per run of equal subjects and the ""
-    // instance for headerless messages.
+    // re-fetchable store, so they ship the ledger's buffered entries
+    // (seq = ledger offset), packed one byte block per partition.
     if (replayConn.isDefined)
       return NatsReplayPartition.slice(s, e - s, fullSchema, required, filters, opts)
-    // (subject, seq, headersEnc, payload)
-    val msgs: Array[(String, Long, String, String)] = {
-      failIfNotResumable(s)
-      var lastSubject: String = null
-      ledger.rowsBetween(s, e).zipWithIndex.map { case (entry, i) =>
-        val sep = entry.indexOf(NatsMicroBatchStream.SubjectSep)
-        val sep2 = entry.indexOf(NatsMicroBatchStream.SubjectSep, sep + 1)
-        val subj = entry.substring(0, sep)
-        if (lastSubject == null || subj != lastSubject) lastSubject = subj
-        val hdrs = if (sep2 == sep + 1) "" else entry.substring(sep + 1, sep2)
-        (lastSubject, s + 1 + i, hdrs, entry.substring(sep2 + 1))
-      }
-    }
-    def partition(slice: Array[(String, Long, String, String)]): NatsStreamPartition =
-      NatsStreamPartition(
-        slice.map(_._4), slice.map(_._1), slice.map(_._2), slice.map(_._3),
-        fullSchema, required, filters, opts)
-    if (msgs.isEmpty) Array.empty
+    failIfNotResumable(s)
+    val entries = ledger.rowsBetween(s, e)
+    def partition(rows: IndexedSeq[Int]): InputPartition =
+      NatsStreamPartition.pack(entries, rows, s + 1, fullSchema, required, filters, opts)
+    if (entries.isEmpty) Array.empty
     else if (opts.partitionBySubject) {
       // Wildcard-family fan-out: group the batch's rows by the concrete
       // subject each arrived on, then hand WHOLE subjects to partitions —
@@ -1267,34 +1339,27 @@ final class NatsMicroBatchStream(
       // numPartitions) and per-subject arrival order survives, the
       // property count-sliced chunks can't give an interleaved family.
       val bySubject = scala.collection.mutable.LinkedHashMap
-        .empty[String, scala.collection.mutable.ArrayBuffer[(String, Long, String, String)]]
-      msgs.foreach { m =>
-        bySubject.getOrElseUpdate(m._1,
-          scala.collection.mutable.ArrayBuffer.empty[(String, Long, String, String)])
-          .append(m)
+        .empty[String, scala.collection.mutable.ArrayBuffer[Int]]
+      entries.indices.foreach { i =>
+        bySubject.getOrElseUpdate(entries(i).subject,
+          scala.collection.mutable.ArrayBuffer.empty[Int]) += i
       }
       val n = math.max(1, math.min(opts.numPartitions, bySubject.size))
       bySubject.values.grouped(math.ceil(bySubject.size.toDouble / n).toInt)
-        .map(groups => partition(groups.flatten.toArray))
-        .toArray[InputPartition]
+        .map(groups => partition(groups.flatten.toIndexedSeq))
+        .toArray
     } else {
       // Parity default is the reference's single partition
       // (src/data_source.rs:59); numPartitions > 1 slices the batch for
       // parallel decode on executors — the scale path.
-      val n = math.max(1, math.min(opts.numPartitions, msgs.length))
-      msgs.grouped(math.ceil(msgs.length.toDouble / n).toInt)
+      val n = math.max(1, math.min(opts.numPartitions, entries.length))
+      entries.indices.grouped(math.ceil(entries.length.toDouble / n).toInt)
         .map(partition)
-        .toArray[InputPartition]
+        .toArray
     }
   }
 
-  override def createReaderFactory(): PartitionReaderFactory = new PartitionReaderFactory {
-    override def createReader(partition: InputPartition): PartitionReader[InternalRow] =
-      partition match {
-        case p: NatsStreamPartition => new PayloadPartitionReader(p)
-        case p: NatsReplayPartition => new NatsReplayReader(p)
-      }
-  }
+  override def createReaderFactory(): PartitionReaderFactory = NatsStreamReaderFactory(malformed)
 
   override def commit(end: Offset): Unit =
     // Replay mode holds no ledger rows — eviction is the ring's capacity
@@ -1323,7 +1388,7 @@ final class NatsMicroBatchStream(
       case None    => math.max(0L, ledger.endOffset - math.max(consumed, admitted))
     }
     val m = new util.HashMap[String, String]()
-    m.put("malformedRows", NatsMetrics.malformedCount(opts.url, opts.subject).toString)
+    m.put("malformedRows", malformed.value.toString)
     m.put("droppedRows", ledger.droppedRows.toString)
     m.put("backlogRows", backlog.toString)
     m

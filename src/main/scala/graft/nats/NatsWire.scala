@@ -1,6 +1,6 @@
 package graft.nats
 
-import java.io.{BufferedInputStream, BufferedOutputStream, EOFException, IOException, InputStream}
+import java.io.{BufferedOutputStream, EOFException, IOException, InputStream}
 import java.net.{InetAddress, InetSocketAddress, ServerSocket, Socket}
 import java.nio.charset.StandardCharsets.{US_ASCII, UTF_8}
 import java.util.concurrent.{ConcurrentHashMap, CopyOnWriteArrayList, CountDownLatch, TimeUnit}
@@ -122,40 +122,187 @@ private[nats] object NatsWire {
         sb.toString
       }
 
-  /** Read one `\r\n`-terminated control line; null on orderly EOF before
-    * any byte. Control lines are ASCII by protocol. */
-  def readLine(in: InputStream): String = {
-    val buf = new java.io.ByteArrayOutputStream(64)
-    var prev = -1
-    while (true) {
-      val b = in.read()
-      if (b < 0) {
-        if (buf.size == 0 && prev == -1) return null
-        throw new EOFException("connection closed mid-line")
-      }
-      if (prev == '\r' && b == '\n') {
-        val bytes = buf.toByteArray
-        return new String(bytes, 0, bytes.length - 1, US_ASCII)
-      }
-      buf.write(b)
-      prev = b
+  /** Frame verbs the readers dispatch on, as ASCII bytes. */
+  val Msg: Array[Byte] = "MSG".getBytes(US_ASCII)
+  val Hmsg: Array[Byte] = "HMSG".getBytes(US_ASCII)
+  val Pub: Array[Byte] = "PUB".getBytes(US_ASCII)
+  val Hpub: Array[Byte] = "HPUB".getBytes(US_ASCII)
+}
+
+/** The one reader of a NATS byte stream, used by [[TcpNatsClient]] and
+  * [[MiniNatsServer]] alike. Each connection is read by a single thread,
+  * so the buffer is plain and unsynchronized: `nextLine` finds the
+  * `\r\n` terminator by scanning the buffer, and splits the line into
+  * whitespace-separated tokens in place, so the frame verbs
+  * (`MSG`/`HMSG`/`PUB`/`HPUB`) are matched and their subject, sid and
+  * size arguments read without building the line as a String. Payload
+  * reads copy straight out of the same buffer.
+  *
+  * A line (and its tokens) stays readable until the next read call.
+  * Bytes past a line are buffered only if the peer already sent them: a
+  * TLS upgrade right after INFO checks `buffered == 0`, since plaintext
+  * left in the buffer would belong to neither side of the handshake.
+  */
+private[nats] final class WireReader(in: InputStream, initialSize: Int = 64 * 1024) {
+  private var buf = new Array[Byte](initialSize)
+  private var pos = 0 // first unconsumed byte
+  private var lim = 0 // end of the bytes read so far
+  // the current line: buf[lineStart, lineEnd), CRLF excluded
+  private var lineStart = 0
+  private var lineEnd = 0
+  // its tokens: the first MaxTokens boundaries are kept, `tokens` counts all
+  private val MaxTokens = 8
+  private val tokStart = new Array[Int](MaxTokens)
+  private val tokEnd = new Array[Int](MaxTokens)
+  private var tokens = 0
+
+  /** Bytes read from the stream but not consumed yet. */
+  def buffered: Int = lim - pos
+
+  /** Read more bytes into the buffer, first compacting (or, when the
+    * unconsumed bytes fill it, growing) it; false on end of stream. */
+  private def fill(): Boolean = {
+    if (pos == lim) { pos = 0; lim = 0 }
+    else if (lim == buf.length) {
+      if (pos > 0) {
+        System.arraycopy(buf, pos, buf, 0, lim - pos)
+        lim -= pos
+        pos = 0
+      } else buf = java.util.Arrays.copyOf(buf, buf.length * 2)
     }
-    throw new IllegalStateException("unreachable")
+    val r = in.read(buf, lim, buf.length - lim)
+    if (r < 0) false else { lim += r; true }
   }
 
-  /** Read exactly `n` payload bytes plus the trailing `\r\n`. */
-  def readPayload(in: InputStream, n: Int): Array[Byte] = {
-    val payload = new Array[Byte](n)
+  /** Advance to the next `\r\n`-terminated control line. False on an
+    * orderly end of stream before any byte of it; `EOFException` when the
+    * stream ends inside it. A lone `\r` or `\n` is line content. */
+  def nextLine(): Boolean = {
+    var scanned = 0 // bytes past pos already searched
+    while (true) {
+      var i = pos + scanned
+      while (i < lim) {
+        if (buf(i) == '\n' && i > pos && buf(i - 1) == '\r') {
+          lineStart = pos
+          lineEnd = i - 1
+          pos = i + 1
+          tokenize()
+          return true
+        }
+        i += 1
+      }
+      scanned = lim - pos
+      if (!fill()) {
+        if (lim == pos) return false
+        throw new EOFException("connection closed mid-line")
+      }
+    }
+    false
+  }
+
+  private def tokenize(): Unit = {
+    tokens = 0
+    var i = lineStart
+    while (i < lineEnd) {
+      while (i < lineEnd && (buf(i) == ' ' || buf(i) == '\t')) i += 1
+      if (i < lineEnd) {
+        val from = i
+        while (i < lineEnd && buf(i) != ' ' && buf(i) != '\t') i += 1
+        if (tokens < MaxTokens) { tokStart(tokens) = from; tokEnd(tokens) = i }
+        tokens += 1
+      }
+    }
+  }
+
+  /** The current line (ASCII by protocol). */
+  def line: String = new String(buf, lineStart, lineEnd - lineStart, US_ASCII)
+
+  /** Whitespace-separated tokens on the current line. */
+  def tokenCount: Int = tokens
+
+  // Malformed lines throw IllegalArgumentException, not IOException: a
+  // protocol error is the peer's bug, not a dropped connection, and the
+  // client's read loop must not answer it with a reconnect.
+  private def checkToken(i: Int): Unit =
+    if (i < 0 || i >= math.min(tokens, MaxTokens))
+      throw new IllegalArgumentException(s"malformed control line (no token $i): '$line'")
+
+  def token(i: Int): String = {
+    checkToken(i)
+    new String(buf, tokStart(i), tokEnd(i) - tokStart(i), US_ASCII)
+  }
+
+  /** Does token `i` equal the verb `ascii`? */
+  def tokenIs(i: Int, ascii: Array[Byte]): Boolean =
+    i < math.min(tokens, MaxTokens) && tokEnd(i) - tokStart(i) == ascii.length && {
+      var k = 0
+      val from = tokStart(i)
+      while (k < ascii.length && buf(from + k) == ascii(k)) k += 1
+      k == ascii.length
+    }
+
+  /** Token `i` as a non-negative decimal size. */
+  def sizeToken(i: Int): Int = {
+    checkToken(i)
+    def bad = new NumberFormatException(s"malformed size '${token(i)}' in '$line'")
+    var v = 0L
+    var k = tokStart(i)
+    while (k < tokEnd(i)) {
+      val d = buf(k) - '0'
+      if (d < 0 || d > 9) throw bad
+      v = v * 10 + d
+      if (v > Int.MaxValue) throw bad
+      k += 1
+    }
+    v.toInt
+  }
+
+  /** Read exactly `n` bytes. */
+  def readBytes(n: Int): Array[Byte] = {
+    val out = new Array[Byte](n)
     var off = 0
     while (off < n) {
-      val r = in.read(payload, off, n - off)
-      if (r < 0) throw new EOFException("connection closed mid-payload")
-      off += r
+      if (pos == lim && !fill()) throw new EOFException("connection closed mid-payload")
+      val take = math.min(n - off, lim - pos)
+      System.arraycopy(buf, pos, out, off, take)
+      pos += take
+      off += take
     }
-    if (in.read() != '\r' || in.read() != '\n')
-      throw new IOException("payload not terminated by CRLF")
-    payload
+    out
   }
+
+  private def expectByte(want: Byte): Unit = {
+    if (pos == lim && !fill()) throw new EOFException("connection closed mid-payload")
+    if (buf(pos) != want) throw new IOException("payload not terminated by CRLF")
+    pos += 1
+  }
+
+  /** Consume the `\r\n` that ends every payload. */
+  def readCrlf(): Unit = { expectByte('\r'); expectByte('\n') }
+
+  /** Read exactly `n` payload bytes plus the trailing `\r\n`. */
+  def readPayload(n: Int): Array[Byte] = {
+    val p = readBytes(n)
+    readCrlf()
+    p
+  }
+
+  /** Token `i`, or `prev` itself when it spells the same string — the
+    * subject and sid repeated frame after frame cost no allocation. */
+  def token(i: Int, prev: String): String = {
+    checkToken(i)
+    val from = tokStart(i)
+    val len = tokEnd(i) - from
+    if (prev != null && prev.length == len && {
+      var k = 0
+      while (k < len && prev.charAt(k) == buf(from + k)) k += 1
+      k == len
+    }) prev
+    else token(i)
+  }
+
+  /** The next control line as a String; null on orderly end of stream. */
+  def readLine(): String = if (nextLine()) line else null
 }
 
 /** NATS client over TCP. Thread-safe: publishes may come from any task
@@ -192,7 +339,7 @@ final class TcpNatsClient(
     tlsContext: Option[javax.net.ssl.SSLContext] = None)
     extends NatsConnection {
   @volatile private var socket: Socket = null
-  @volatile private var in: BufferedInputStream = null
+  @volatile private var in: WireReader = null
   @volatile private var out: BufferedOutputStream = null
   @volatile private var serverMaxPayload: Int = NatsWire.MaxPayload
   private val writeLock = new Object
@@ -253,22 +400,26 @@ final class TcpNatsClient(
     plainSock.connect(new InetSocketAddress(host, port), 5000)
     plainSock.setTcpNoDelay(true)
     var sock: Socket = plainSock
-    var i = new BufferedInputStream(sock.getInputStream, 64 * 1024)
+    var i = new WireReader(sock.getInputStream)
     var o = new BufferedOutputStream(sock.getOutputStream, 64 * 1024)
     try {
       sock.setSoTimeout(5000)
-      val info = NatsWire.readLine(i)
+      val info = i.readLine()
       if (info == null || !info.startsWith("INFO "))
         throw new IOException(s"not a NATS server: expected INFO, got '$info'")
       // A server with tls{} configured advertises tls_required and
       // expects the TLS handshake immediately after INFO (client speaks
       // first — ClientHello — so nothing beyond the INFO line is ever
-      // sitting in the plaintext read buffer). Layer a client-mode TLS
+      // sitting in the plaintext read buffer — a server that sent more
+      // is refused rather than mis-framed). Layer a client-mode TLS
       // session over the same socket and continue CONNECT/PING on the
       // encrypted streams (GraftTls documents trust configuration).
       if ("\"tls_required\"\\s*:\\s*true".r.findFirstIn(info).isDefined) {
+        if (i.buffered > 0)
+          throw new IOException(s"server sent ${i.buffered} plaintext bytes after INFO, " +
+            "ahead of the TLS handshake it demands")
         sock = GraftTls.upgradeClient(sock, host, port, tlsContext)
-        i = new BufferedInputStream(sock.getInputStream, 64 * 1024)
+        i = new WireReader(sock.getInputStream)
         o = new BufferedOutputStream(sock.getOutputStream, 64 * 1024)
       }
       // A server with authorization{} configured advertises auth_required;
@@ -295,7 +446,7 @@ final class TcpNatsClient(
       o.flush()
       var handshook = false
       while (!handshook) {
-        NatsWire.readLine(i) match {
+        i.readLine() match {
           case null          => throw new EOFException("server closed during handshake")
           case "PONG"        => handshook = true
           case "PING"        => o.write("PONG\r\n".getBytes(US_ASCII)); o.flush()
@@ -377,29 +528,30 @@ final class TcpNatsClient(
     false
   }
 
-  private def readLoop(stream: BufferedInputStream): Unit = {
-      var line = NatsWire.readLine(stream)
-      while (line != null) {
-        if (line.startsWith("MSG ")) {
-          // MSG <subject> <sid> [reply-to] <#bytes>
-          val t = line.split(" ")
-          val sid = t(2)
-          val reply = if (t.length >= 5) t(3) else null
-          val n = t(t.length - 1).toInt
-          val payload = NatsWire.readPayload(stream, n)
-          val h = handlers.get(sid)
-          if (h != null) h(t(1), reply, Nil, payload) // t(1) = concrete subject
-        } else if (line.startsWith("HMSG ")) {
-          // HMSG <subject> <sid> [reply-to] <#header-bytes> <#total-bytes>
-          val t = line.split(" ")
-          val sid = t(2)
-          val reply = if (t.length >= 6) t(3) else null
-          val hdrLen = t(t.length - 2).toInt
-          val total = t(t.length - 1).toInt
-          val all = NatsWire.readPayload(stream, total)
-          val h = handlers.get(sid)
+  private def readLoop(r: WireReader): Unit = {
+    var subject: String = null // last subject/sid, reused while they repeat
+    var sid: String = null
+    while (r.nextLine()) {
+      val msg = r.tokenIs(0, NatsWire.Msg)
+      if (msg || r.tokenIs(0, NatsWire.Hmsg)) {
+        // MSG <subject> <sid> [reply-to] <#bytes>
+        // HMSG <subject> <sid> [reply-to] <#header-bytes> <#total-bytes>
+        val t = r.tokenCount
+        subject = r.token(1, subject) // the concrete subject
+        sid = r.token(2, sid)
+        val reply = if (t >= (if (msg) 5 else 6)) r.token(3) else null
+        val h = handlers.get(sid)
+        if (msg) {
+          val payload = r.readPayload(r.sizeToken(t - 1))
+          if (h != null) h(subject, reply, Nil, payload)
+        } else {
+          val hdrLen = r.sizeToken(t - 2)
+          val total = r.sizeToken(t - 1)
+          require(hdrLen <= total, s"HMSG header length $hdrLen exceeds total $total")
+          val block = r.readBytes(hdrLen)
+          val payload = r.readBytes(total - hdrLen)
+          r.readCrlf()
           if (h != null) {
-            val block = java.util.Arrays.copyOfRange(all, 0, hdrLen)
             // Surface a server inline status ("NATS/1.0 404 …" — JetStream
             // no-messages / request-expired replies) as a synthetic
             // Nats-Status pair, the way official clients expose
@@ -408,15 +560,18 @@ final class TcpNatsClient(
               case Some(status) => ("Nats-Status" -> status) +: NatsWire.decodeHeaders(block)
               case None         => NatsWire.decodeHeaders(block)
             }
-            h(t(1), reply, pairs, java.util.Arrays.copyOfRange(all, hdrLen, all.length))
+            h(subject, reply, pairs, payload)
           }
-        } else if (line == "PING") {
+        }
+      } else {
+        val line = r.line
+        if (line == "PING") {
           writeLock.synchronized { write("PONG\r\n"); out.flush() }
         } else if (line.startsWith("-ERR")) {
           serverError = line // surfaced on the next client operation
         } // PONG / INFO / +OK: no-ops outside the handshake
-        line = NatsWire.readLine(stream)
       }
+    }
   }
 
   private val reader = new Thread(() => {
@@ -1229,10 +1384,10 @@ final class MiniNatsServer(
   private final class ClientConn(plainSock: Socket) {
     plainSock.setTcpNoDelay(true)
     // TLS mode swaps these for the layered SSL streams right after the
-    // plaintext INFO goes out (run()); until then nothing else touches
-    // them, and every later use reads the upgraded values.
+    // plaintext INFO goes out (run(), which also opens the connection's
+    // WireReader only then); until then nothing else touches them, and
+    // every later use reads the upgraded values.
     @volatile private var sock: Socket = plainSock
-    @volatile private var in = new BufferedInputStream(sock.getInputStream, 64 * 1024)
     @volatile private var out = new BufferedOutputStream(sock.getOutputStream, 64 * 1024)
     def disconnect(): Unit = try sock.close() catch { case _: IOException => () }
     private val writeLock = new Object
@@ -1290,21 +1445,44 @@ final class MiniNatsServer(
         // documented post-INFO handshake order (docs.nats.io, "TLS").
         tlsKeystore.foreach { case (path, pw) =>
           sock = GraftTls.upgradeServer(sock, GraftTls.serverContext(path, pw))
-          in = new BufferedInputStream(sock.getInputStream, 64 * 1024)
           out = new BufferedOutputStream(sock.getOutputStream, 64 * 1024)
         }
-        var line = readLine(in)
-        while (line != null && !stopped.get) {
-          val sp = line.indexOf(' ')
-          val verb = if (sp < 0) line else line.substring(0, sp)
+        val r = new WireReader(sock.getInputStream)
+        var lastSubject: String = null // reused while publishes repeat it
+        while (r.nextLine() && !stopped.get) {
+          val pub = r.tokenIs(0, Pub)
+          val hpub = !pub && r.tokenIs(0, Hpub)
+          val verb = if (pub || hpub || r.tokenCount == 0) "" else r.token(0)
           // Everything except the handshake verbs demands prior auth —
           // the documented behavior of a real server's authorization block.
-          if (!authed && verb != "CONNECT" && verb != "PING" && verb != "PONG") {
+          if (!authed && (pub || hpub || (verb != "CONNECT" && verb != "PING" && verb != "PONG"))) {
             send("-ERR 'Authorization Violation'\r\n")
             throw new EOFException
           }
-          verb match {
+          val t = r.tokenCount
+          if (pub) {
+            // PUB <subject> [reply-to] <#bytes>
+            lastSubject = r.token(1, lastSubject)
+            val reply = if (t >= 4) r.token(2) else null
+            val n = r.sizeToken(t - 1)
+            if (n > MaxPayload) { send("-ERR 'Maximum Payload Violation'\r\n"); throw new EOFException }
+            handlePub(lastSubject, reply, Nil, r.readPayload(n))
+          } else if (hpub) {
+            // HPUB <subject> [reply-to] <#header-bytes> <#total-bytes>
+            lastSubject = r.token(1, lastSubject)
+            val reply = if (t >= 5) r.token(2) else null
+            val hdrLen = r.sizeToken(t - 2)
+            val total = r.sizeToken(t - 1)
+            if (total > MaxPayload) { send("-ERR 'Maximum Payload Violation'\r\n"); throw new EOFException }
+            require(hdrLen <= total, s"HPUB header length $hdrLen exceeds total $total")
+            val block = r.readBytes(hdrLen)
+            val payload = r.readBytes(total - hdrLen)
+            r.readCrlf()
+            handlePub(lastSubject, reply, NatsWire.decodeHeaders(block), payload)
+          } else verb match {
             case "CONNECT" =>
+              val line = r.line
+              val sp = line.indexOf(' ')
               val connectBody = if (sp < 0) "" else line.substring(sp + 1)
               if (authRequired && !checkAuth(connectBody)) {
                 send("-ERR 'Authorization Violation'\r\n")
@@ -1317,42 +1495,18 @@ final class MiniNatsServer(
               send("PING\r\n")
             case "PING" => send("PONG\r\n")
             case "PONG" => pongsSeen.incrementAndGet(); ()
-            case "PUB" =>
-              // PUB <subject> [reply-to] <#bytes>
-              val t = line.split(" ")
-              val subject = t(1)
-              val reply = if (t.length >= 4) t(2) else null
-              val n = t(t.length - 1).toInt
-              if (n > MaxPayload) { send("-ERR 'Maximum Payload Violation'\r\n"); throw new EOFException }
-              val payload = readPayload(in, n)
-              handlePub(subject, reply, Nil, payload)
-            case "HPUB" =>
-              // HPUB <subject> [reply-to] <#header-bytes> <#total-bytes>
-              val t = line.split(" ")
-              val subject = t(1)
-              val reply = if (t.length >= 5) t(2) else null
-              val hdrLen = t(t.length - 2).toInt
-              val total = t(t.length - 1).toInt
-              if (total > MaxPayload) { send("-ERR 'Maximum Payload Violation'\r\n"); throw new EOFException }
-              val all = readPayload(in, total)
-              handlePub(subject, reply,
-                NatsWire.decodeHeaders(java.util.Arrays.copyOfRange(all, 0, hdrLen)),
-                java.util.Arrays.copyOfRange(all, hdrLen, all.length))
             case "SUB" =>
               // SUB <subject> [queue-group] <sid>
-              val t = line.split(" ")
-              val subject = t(1)
-              val (group, sid) = if (t.length >= 4) (t(2), t(3)) else (null, t(2))
+              val subject = r.token(1)
+              val (group, sid) = if (t >= 4) (r.token(2), r.token(3)) else (null, r.token(2))
               if (valid(() => NatsSubjects.validatePattern(subject)))
                 subs.put(sid, (subject, group))
               else send("-ERR 'Invalid Subject'\r\n")
             case "UNSUB" =>
-              val t = line.split(" ")
-              val removed = subs.remove(t(1))
+              val removed = subs.remove(r.token(1))
               if (removed != null && removed._2 != null) pruneRr(removed._1, removed._2)
             case _ => () // unknown verbs ignored (forward compatibility)
           }
-          line = readLine(in)
         }
       } catch {
         case _: IOException => () // disconnect

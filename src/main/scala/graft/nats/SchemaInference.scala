@@ -1,7 +1,6 @@
 package graft.nats
 
 import java.nio.charset.StandardCharsets.UTF_8
-import java.time.{LocalDate, LocalDateTime}
 
 import com.fasterxml.jackson.core.{JsonFactory, JsonToken}
 import com.fasterxml.jackson.core.exc.StreamReadException
@@ -153,8 +152,8 @@ object SchemaInference {
   }
 
   private def stringKind(s: String): Kind =
-    if (scala.util.Try(LocalDateTime.parse(s, CsvCodec.tsFormat)).isSuccess) KTimestamp
-    else if (scala.util.Try(LocalDate.parse(s, CsvCodec.dateFormat)).isSuccess) KDate
+    if (CsvCodec.parseTimestamp(s).isDefined) KTimestamp
+    else if (CsvCodec.parseDate(s).isDefined) KDate
     else KString
 
   /** One flat object → (key → kind) in key order, or None if the payload

@@ -84,4 +84,93 @@ object CsvCodecProps extends Properties("CsvCodec") {
       (epochSec, subMicros) =>
         tsC.encode(Array[Any](epochSec * 1000000L + subMicros)).isLeft
     }
+
+  // ---- fixed-position timestamp/date parse == the STRICT formatter ----
+
+  property("timestamps: the parse returns exactly the STRICT formatter's value or error") =
+    Prop.forAll(Gen.listOfN(50, WireTimeGen.timestamps)) { _.forall { s =>
+      tsC.parse(s).map(_.toSeq) == WireTimeGen.formatterTimestamp(s).map(Seq[Any](_))
+        .toRight(CodecError.TypeError(s"Failed to parse $s as Timestamp for field x. " +
+          "Expected format: YYYY-MM-DD HH:MM:SS"))
+    } }
+
+  property("dates: the parse returns exactly the STRICT formatter's value or error") =
+    Prop.forAll(Gen.listOfN(50, WireTimeGen.dates)) { _.forall { s =>
+      dateC.parse(s).map(_.toSeq) == WireTimeGen.formatterDate(s).map(Seq[Any](_))
+        .toRight(CodecError.TypeError(s"Failed to parse $s as Date for field x. " +
+          "Expected format: YYYY-MM-DD"))
+    } }
+}
+
+/** Wire timestamp/date strings for the codec equivalence properties, and
+  * the formatter-only parse they must agree with. Canonical-shape strings
+  * carry arbitrary digits with the calendar edges over-weighted (month 00
+  * and 13, day 31 in 30-day months, Feb 29 in 1900/2000/2023/2024, hour
+  * 24, second 60, year 0000); non-canonical ones cover signed and 5-digit
+  * years, one-digit fields, surrounding spaces and single-character
+  * mutations of canonical strings. None contains ',', '"' or '\\', so
+  * they embed unchanged in a CSV field or a JSON string. */
+object WireTimeGen {
+  import java.time.{LocalDate, LocalDateTime, ZoneOffset}
+
+  def formatterTimestamp(s: String): Option[Long] =
+    try Some(LocalDateTime.parse(s, CsvCodec.tsFormat).toEpochSecond(ZoneOffset.UTC) * 1000000L)
+    catch { case _: Exception => None }
+
+  def formatterDate(s: String): Option[Int] =
+    try Some(LocalDate.parse(s, CsvCodec.dateFormat).toEpochDay.toInt)
+    catch { case _: Exception => None }
+
+  private def field(edges: Seq[Int], max: Int): Gen[Int] =
+    Gen.frequency(3 -> Gen.oneOf(edges), 2 -> Gen.choose(0, max))
+
+  private val year = field(Seq(0, 1, 1900, 1970, 2000, 2023, 2024, 2100, 9999), 9999)
+  private val month = field(Seq(0, 1, 2, 4, 6, 9, 11, 12, 13), 99)
+  private val day = field(Seq(0, 1, 28, 29, 30, 31, 32), 99)
+  private val hour = field(Seq(0, 23, 24, 25), 99)
+  private val minSec = field(Seq(0, 59, 60, 61), 99)
+
+  val canonicalDate: Gen[String] =
+    for (y <- year; m <- month; d <- day) yield f"$y%04d-$m%02d-$d%02d"
+
+  val canonicalTimestamp: Gen[String] =
+    for (date <- canonicalDate; h <- hour; mi <- minSec; s <- minSec)
+      yield f"$date $h%02d:$mi%02d:$s%02d"
+
+  /** One character inserted, deleted or replaced. */
+  private def mutate(s: String): Gen[String] =
+    for {
+      i <- Gen.choose(0, s.length - 1)
+      c <- Gen.oneOf("0123456789-: +T".toSeq)
+      op <- Gen.choose(0, 2)
+    } yield op match {
+      case 0 => s.substring(0, i) + c + s.substring(i)
+      case 1 => s.substring(0, i) + s.substring(i + 1)
+      case _ => s.substring(0, i) + c + s.substring(i + 1)
+    }
+
+  private def nonCanonical(canonical: Gen[String], fixed: Seq[String]): Gen[String] =
+    Gen.oneOf(
+      Gen.oneOf(fixed),
+      canonical.map(" " + _),
+      canonical.map(_ + " "),
+      canonical.map("+" + _),
+      canonical.map("-" + _),
+      canonical.map("1" + _),
+      canonical.flatMap(mutate))
+
+  val timestamps: Gen[String] = Gen.frequency(
+    3 -> canonicalTimestamp,
+    2 -> nonCanonical(canonicalTimestamp, Seq(
+      "+10000-01-01 00:00:00", "10000-01-01 00:00:00", "-0001-01-01 00:00:00",
+      "+2024-01-01 00:00:00", "2024-1-01 00:00:00", "2024-01-1 00:00:00",
+      "2024-01-01 0:00:00", "2024-01-01 00:0:00", "2024-01-01 00:00:0",
+      "2024-01-01T00:00:00", "2024-01-01  00:00:00", "2024-01-01 00:00:00.0",
+      "2024-01-01", " ")))
+
+  val dates: Gen[String] = Gen.frequency(
+    3 -> canonicalDate,
+    2 -> nonCanonical(canonicalDate, Seq(
+      "+10000-01-01", "10000-01-01", "-0001-01-01", "+2024-01-01", "2024-1-01",
+      "2024-01-1", "24-01-01", "2024-01-01 00:00:00", "2024/01/01", " ")))
 }

@@ -94,4 +94,22 @@ object JsonCodecProps extends Properties("JsonCodec") {
     Prop.forAll(Gen.choose(0, 1000)) { i =>
       intC.parse(s"""{"x":$i} {"x":$i}""").isLeft && intC.parse(s"""{"x":$i}]""").isLeft
     }
+
+  // ---- fixed-position timestamp/date parse == the STRICT formatter ----
+
+  property("timestamps: the parse returns exactly the STRICT formatter's value or error") =
+    Prop.forAll(Gen.listOfN(50, WireTimeGen.timestamps)) { _.forall { s =>
+      tsC.parse(s"""{"x":"$s"}""").map(_.toSeq) ==
+        WireTimeGen.formatterTimestamp(s).map(Seq[Any](_))
+          .toRight(CodecError.TypeError(s"Failed to parse $s as Timestamp for field x. " +
+            "Expected format: YYYY-MM-DD HH:MM:SS"))
+    } }
+
+  property("dates: the parse returns exactly the STRICT formatter's value or error") =
+    Prop.forAll(Gen.listOfN(50, WireTimeGen.dates)) { _.forall { s =>
+      dateC.parse(s"""{"x":"$s"}""").map(_.toSeq) ==
+        WireTimeGen.formatterDate(s).map(Seq[Any](_))
+          .toRight(CodecError.TypeError(s"Failed to parse $s as Date for field x. " +
+            "Expected format: YYYY-MM-DD"))
+    } }
 }

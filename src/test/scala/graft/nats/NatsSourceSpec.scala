@@ -335,7 +335,7 @@ class NatsSourceSpec extends AnyFunSuite with BeforeAndAfterAll {
       assert(parts.length === 4, s"4 subjects with numPartitions=4 must fan out 4-wide")
       // each partition holds exactly one subject's rows, in arrival order
       val byName = parts.map { p =>
-        val names = p.payloads.map(_.split(",")(1))
+        val names = (0 until p.rowCount).map(p.payload(_).split(",")(1))
         val families = names.map(_.dropRight(1)).distinct
         assert(families.length === 1, s"partition mixes subjects: ${names.toSeq}")
         assert(names.map(_.last).toSeq === Seq('1', '2', '3'),
@@ -427,6 +427,40 @@ class NatsSourceSpec extends AnyFunSuite with BeforeAndAfterAll {
       assert(m.get("backlogRows").toLong === 0, // fully drained
         s"drained stream must report no backlog: $m")
     } finally { q.stop(); conn.close() }
+  }
+
+  test("malformedRows is per query: two streams on one subject count only their own rejects") {
+    // Both queries read every message on the subject; only the one whose
+    // schema makes "x,apple" malformed may count it. The JVM-wide
+    // NatsMetrics counter (keyed by url/subject) sees it once.
+    val url = freshBus()
+    val conn = NatsTransport.connect(url)
+    val textIds = StructType(Seq(
+      StructField("id", StringType, nullable = false),
+      StructField("name", StringType, nullable = false)))
+    def start(s: StructType, name: String) = spark.readStream.format("nats").schema(s)
+      .option("url", url).option("subject", "shared")
+      .option("batchSize", "2")
+      .load()
+      .writeStream.format("memory").queryName(name).start()
+    val strict = start(schema, "nats_shared_int")
+    val lenient = start(textIds, "nats_shared_text")
+    try {
+      val deadline = System.currentTimeMillis() + 10000
+      while (InMemoryBus.subscriberCount(url.stripPrefix("memory://"), "shared") < 2 &&
+        System.currentTimeMillis() < deadline) Thread.sleep(10)
+      conn.publish("shared", "1,ok".getBytes)
+      conn.publish("shared", "x,apple".getBytes) // an INT id only for `strict`
+      strict.processAllAvailable()
+      lenient.processAllAvailable()
+      def malformed(q: org.apache.spark.sql.streaming.StreamingQuery) =
+        q.lastProgress.sources.head.metrics.get("malformedRows").toLong
+      assert(malformed(strict) === 1)
+      assert(malformed(lenient) === 0)
+      assert(spark.sql("SELECT * FROM nats_shared_text").count() === 2)
+      assert(spark.sql("SELECT * FROM nats_shared_int").count() === 1)
+      assert(NatsMetrics.malformedCount(url, "shared") === 1)
+    } finally { strict.stop(); lenient.stop(); conn.close() }
   }
 
   test("stream-static join broadcasts the dimension per micro-batch; the stream side never shuffles") {

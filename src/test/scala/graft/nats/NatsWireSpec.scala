@@ -1,6 +1,6 @@
 package graft.nats
 
-import java.io.{BufferedInputStream, BufferedOutputStream, IOException}
+import java.io.{BufferedOutputStream, IOException}
 import java.net.Socket
 import java.nio.charset.StandardCharsets.US_ASCII
 import java.util.concurrent.{LinkedBlockingQueue, TimeUnit}
@@ -154,19 +154,19 @@ class NatsWireSpec extends AnyFunSuite with BeforeAndAfterAll {
     withServer { server =>
       val sock = new Socket("127.0.0.1", server.port)
       try {
-        val in = new BufferedInputStream(sock.getInputStream)
+        val in = new WireReader(sock.getInputStream)
         val out = new BufferedOutputStream(sock.getOutputStream)
-        val info = NatsWire.readLine(in)
+        val info = in.readLine()
         assert(info.startsWith("INFO {"), s"server must speak first with INFO: $info")
         out.write("CONNECT {\"verbose\":false}\r\n".getBytes(US_ASCII)); out.flush()
-        assert(NatsWire.readLine(in) === "PING") // liveness probe after CONNECT
+        assert(in.readLine() === "PING") // liveness probe after CONNECT
         out.write("PONG\r\n".getBytes(US_ASCII))
         out.write("PUB a..b 2\r\nxx\r\n".getBytes(US_ASCII)); out.flush() // empty token
-        val err = NatsWire.readLine(in)
+        val err = in.readLine()
         assert(err === "-ERR 'Invalid Subject'", err)
         // PING/PONG still works after the error (connection survives)
         out.write("PING\r\n".getBytes(US_ASCII)); out.flush()
-        assert(NatsWire.readLine(in) === "PONG")
+        assert(in.readLine() === "PONG")
       } finally sock.close()
     }
   }
@@ -530,6 +530,124 @@ class NatsWireSpec extends AnyFunSuite with BeforeAndAfterAll {
     } finally conn.close()
   }
 
+  // ---- WireReader: framing across arbitrary read boundaries ----
+
+  /** Hands out `bytes` 1–3 at a time (seeded), and never reads past a
+    * `pause` offset in one call — a peer that stopped sending there. */
+  private final class Trickle(bytes: Array[Byte], seed: Long, pauses: Set[Int] = Set.empty)
+      extends java.io.InputStream {
+    private val rnd = new scala.util.Random(seed)
+    var pos = 0
+    override def read(): Int =
+      if (pos >= bytes.length) -1 else { pos += 1; bytes(pos - 1) & 0xff }
+    override def read(b: Array[Byte], off: Int, len: Int): Int =
+      if (pos >= bytes.length) -1
+      else {
+        var n = math.min(math.min(len, 1 + rnd.nextInt(3)), bytes.length - pos)
+        pauses.filter(p => p > pos && p < pos + n).minOption.foreach(p => n = p - pos)
+        System.arraycopy(bytes, pos, b, off, n)
+        pos += n
+        n
+      }
+  }
+
+  private def trickle(wire: String, seed: Long, bufSize: Int): WireReader =
+    new WireReader(new Trickle(wire.getBytes(US_ASCII), seed), bufSize)
+
+  // every combination of read chunking and a buffer smaller than a line
+  private val chunkings = for (seed <- 1L to 12L; size <- Seq(4, 16, 64 * 1024)) yield (seed, size)
+
+  test("wire reader: lone CR/LF stay in a control line and CRLF inside a payload is data, at any read boundary") {
+    val wire =
+      "INFO {\"max_payload\":1048576}\r\n" +
+        "-ERR 'a\rb'\r\n" +                          // lone CR inside a line
+        "-ERR 'c\nd'\r\n" +                          // lone LF inside a line
+        "MSG ev.x 7 _INBOX.r 6\r\nab\r\ncd\r\n" +      // CRLF inside the payload
+        "HMSG ev.x 7 18 21\r\nNATS/1.0\r\nK: V\r\n\r\nxyz\r\n" +
+        "PUB  ev.y\t2\r\na\r\r\n" +                   // payload ends in CR; spaced tokens
+        "PING\r\n"
+    chunkings.foreach { case (seed, size) =>
+      val r = trickle(wire, seed, size)
+      val clue = s"seed $seed, buffer $size"
+      assert(r.readLine() === "INFO {\"max_payload\":1048576}", clue)
+      assert(r.readLine() === "-ERR 'a\rb'", clue)
+      assert(r.readLine() === "-ERR 'c\nd'", clue)
+      assert(r.nextLine() && r.tokenIs(0, NatsWire.Msg) && r.tokenCount === 5, clue)
+      assert((r.token(1), r.token(2), r.token(3), r.sizeToken(4)) === ("ev.x", "7", "_INBOX.r", 6), clue)
+      assert(new String(r.readPayload(6), US_ASCII) === "ab\r\ncd", clue)
+      assert(r.nextLine() && r.tokenIs(0, NatsWire.Hmsg) && !r.tokenIs(0, NatsWire.Msg), clue)
+      val (hdrLen, total) = (r.sizeToken(3), r.sizeToken(4))
+      val block = r.readBytes(hdrLen)
+      val payload = r.readBytes(total - hdrLen)
+      r.readCrlf()
+      assert(NatsWire.decodeHeaders(block) === Seq("K" -> "V"), clue)
+      assert(new String(payload, US_ASCII) === "xyz", clue)
+      assert(r.nextLine() && r.tokenIs(0, NatsWire.Pub) && r.tokenCount === 3, clue)
+      val subject = r.token(1)
+      assert(r.token(1, subject) eq subject, clue) // a repeated token is not re-allocated
+      assert(new String(r.readPayload(r.sizeToken(2)), US_ASCII) === "a\r", clue)
+      assert(r.readLine() === "PING", clue)
+      assert(r.readLine() === null, clue)
+      assert(r.buffered === 0, clue)
+    }
+  }
+
+  test("wire reader: orderly EOF before any byte is null; EOF inside a line or payload is EOFException") {
+    chunkings.foreach { case (seed, size) =>
+      val clue = s"seed $seed, buffer $size"
+      assert(trickle("", seed, size).readLine() === null, clue)
+      Seq("PIN", "PING\r", "MSG a 1 5\r\nab", "MSG a 1 2\r\nab", "MSG a 1 2\r\nab\r").foreach { wire =>
+        val r = trickle(wire, seed, size)
+        intercept[java.io.EOFException] {
+          while (r.nextLine()) r.readPayload(r.sizeToken(r.tokenCount - 1))
+        }
+      }
+      val bad = trickle("MSG a 1 2\r\nabXY", seed, size)
+      assert(bad.nextLine())
+      val e = intercept[IOException](bad.readPayload(2))
+      assert(e.getMessage.contains("not terminated by CRLF"), clue)
+      val junk = trickle("MSG a 1 notanumber\r\n", seed, size)
+      assert(junk.nextLine())
+      intercept[NumberFormatException](junk.sizeToken(3)) // a protocol error, not an IOException
+    }
+  }
+
+  test("wire reader: nothing past INFO is buffered before a TLS upgrade; a server that sends more is refused") {
+    // The server stops after INFO until the client's ClientHello arrives:
+    // the reader must hand back INFO with no plaintext held back, leaving
+    // the TLS record bytes on the socket for the SSL layer.
+    val info = "INFO {\"tls_required\":true}\r\n"
+    val tlsRecord = Array[Byte](0x16, 0x03, 0x03, 0x00, 0x02)
+    chunkings.foreach { case (seed, size) =>
+      val raw = new Trickle(info.getBytes(US_ASCII) ++ tlsRecord, seed, pauses = Set(info.length))
+      val r = new WireReader(raw, size)
+      assert(r.readLine() === info.stripSuffix("\r\n"))
+      assert(r.buffered === 0, s"seed $seed, buffer $size")
+      assert(raw.pos === info.length, "the reader consumed bytes past INFO")
+    }
+    // A broker that sends plaintext after a tls_required INFO cannot be
+    // upgraded cleanly: the client refuses instead of mis-framing.
+    val ss = new java.net.ServerSocket(0, 1, java.net.InetAddress.getLoopbackAddress)
+    val rogue = new Thread(() => {
+      try {
+        val s = ss.accept()
+        s.getOutputStream.write((info + "PING\r\n").getBytes(US_ASCII))
+        s.getOutputStream.flush()
+        Thread.sleep(2000)
+        s.close()
+      } catch { case _: Exception => () }
+    })
+    rogue.setDaemon(true)
+    rogue.start()
+    try {
+      val e = intercept[IOException] {
+        new TcpNatsClient("127.0.0.1", ss.getLocalPort, tlsContext = Some(trustCtx()),
+          reconnectAttempts = 0).close()
+      }
+      assert(e.getMessage.contains("plaintext"), e.getMessage)
+    } finally ss.close()
+  }
+
   // ---- TLS: the post-INFO upgrade (docs.nats.io "TLS"; reference
   // parity: async-nats does TLS via rustls, Cargo.toml:9) ----
 
@@ -676,13 +794,13 @@ class NatsWireSpec extends AnyFunSuite with BeforeAndAfterAll {
     val rogue = new Thread(() => {
       try {
         val s = ss.accept()
-        val in = new BufferedInputStream(s.getInputStream)
+        val in = new WireReader(s.getInputStream)
         val out = s.getOutputStream
         out.write("INFO {\"max_payload\":1048576}\r\n".getBytes(US_ASCII))
         out.flush()
         // drain CONNECT, answer the handshake PING
-        var line = NatsWire.readLine(in)
-        while (line != null && !line.startsWith("PING")) line = NatsWire.readLine(in)
+        var line = in.readLine()
+        while (line != null && !line.startsWith("PING")) line = in.readLine()
         out.write("PONG\r\n".getBytes(US_ASCII))
         out.flush()
         // garbage frame: size token is not a number
